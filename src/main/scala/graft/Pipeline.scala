@@ -81,7 +81,10 @@ object Pipeline {
             val partitioned = Set("gold_geo_winnings", "gold_vendor_leaderboard",
               "gold_time_series").contains(name)
             Writers.writeGold(df, s"$outRoot/gold/$name", partitioned)
-            val rows = spark.read.parquet(s"$outRoot/gold/$name").count()
+            // the builder's schema, not inference: a partitioned write of
+            // zero rows leaves only _SUCCESS, which inference rejects
+            val rows = spark.read.schema(df.schema)
+              .parquet(s"$outRoot/gold/$name").count()
             Log.event("gold_rows", "table" -> name, "rows" -> rows)
             name -> rows
           }

@@ -191,10 +191,6 @@ object Tables {
     load(spark, sfDir, "events")
       .withColumn("ts_utc", org.apache.spark.sql.functions.expr("timestamp_micros(ts DIV 1000)"))
 
-  /** Register every table as a temp view so `spark.sql` queries work. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    names.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
-
   /** Adaptive scan widening (r20; optimization guide §2.5 "input skew: one
     * huge unsplittable file — repartition immediately after the read").
     *

@@ -104,13 +104,6 @@ object Analytics {
     np.join(no, Seq("l_suppkey"))
   }
 
-  /** The retired multi-distinct Expand q12 spelling — r20 A/B ledger. */
-  def qNuniquePerGroupExpand(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .groupBy(col("l_suppkey"))
-      .agg(countDistinct(col("l_partkey")).as("n_parts"),
-        countDistinct(col("l_orderkey")).as("n_orders"))
-
   val qNuniquePerGroupSql: String =
     """SELECT l_suppkey, COUNT(DISTINCT l_partkey) AS n_parts,
       |  COUNT(DISTINCT l_orderkey) AS n_orders
@@ -870,25 +863,16 @@ object Analytics {
     both.unionByName(byFlag).unionByName(total)
   }
 
-  /** The retired Expand ROLLUP spelling, kept for the r20 A/B ledger
-    * (never part of the gated surface).
-    */
-  def qRollupExpand(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .rollup(col("l_returnflag"), col("l_linestatus"))
-      .agg(count(lit(1)).as("n_rows"), dsum(col("l_quantity")).as("sum_qty"),
-        grouping_id().cast("int").as("gid"))
-
   val qRollupSql: String =
     s"""SELECT l_returnflag, l_linestatus,
        |  COUNT(*) AS n_rows, ${dsumSql("l_quantity")} AS sum_qty,
        |  CAST(GROUPING(l_returnflag) * 2 + GROUPING(l_linestatus) AS INTEGER) AS gid
        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin
 
-  /** A12 scale path: per-group percentiles via the mergeable KLL sketch
-    * aggregate ([[graft.functions.KllQuantiles]]) — one shuffle of
-    * O(k log n)-byte sketches, map-side partial aggregation, vs shipping
-    * raw values.
+  /** A12 scale path: per-group percentiles via Spark's built-in mergeable
+    * KLL sketch aggregate (`kll_sketch_agg_double`, the DataSketches
+    * KllDoublesSketch) — one shuffle of O(k log n)-byte sketches, map-side
+    * partial aggregation, vs shipping raw values.
     *
     * Oracle closure (r14): the estimates depend on merge order (within
     * the rank-error bound), so no DuckDB spelling can match them
@@ -907,8 +891,8 @@ object Analytics {
     * r20 A/B run and REJECTED (the q12/q86 class): widenScan on both
     * passes read best 0.61 vs 0.65–0.69 s with WORSE medians (0.77 vs
     * 0.66–0.72) — window noise, no adoption case; the certificate
-    * columns are merge-order-free so the variant stays runnable in
-    * R20Probe3 if a wider box changes the answer.
+    * columns are merge-order-free, so the variant (R20Probe3, in git
+    * history) can be re-measured if a wider box changes the answer.
     *
     * r21 split verdict: widening ONLY the certificate pass wins where the
     * both-passes widen lost. R20Prof localized the cost: the re-rank is
@@ -925,13 +909,13 @@ object Analytics {
     * widenScan site.
     */
   def qKllQuantiles(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val probs = Seq(0.25, 0.5, 0.75, 0.95)
     val eps = 0.02 // KLL k=256 normalized rank-error bound (QuantileSketchSpec)
     val ests = t(s, dir, "lineitem")
       .groupBy(col("l_returnflag"))
-      .agg(graft.functions.QuantileSketch
-        .kllQuantiles("l_extendedprice", probs, 256).as("qs"))
+      .agg(kll_sketch_get_quantile_double(
+        kll_sketch_agg_double(col("l_extendedprice").cast("double"), 256),
+        lit(probs.toArray)).as("qs"))
       .select(col("l_returnflag"),
         posexplode(col("qs")).as(Seq("pos", "est")))
       .withColumn("p", element_at(lit(probs.toArray), col("pos") + 1))
@@ -967,7 +951,7 @@ object Analytics {
     *
     * r20 A/B run and REJECTED for a measured reason (the q118
     * convention): the q92/q76 partial-reuse decomposition was built
-    * (below, kept for the ledger) and measured SLOWER here — 0.358 s vs
+    * (in git history) and measured SLOWER here — 0.358 s vs
     * 0.328 s same-window at sf0.1 — because CUBE's four grains need
     * THREE marginal re-aggregate jobs + a 4-way union against an Expand
     * whose ×4 rows are orders (150k), a quarter of lineitem; the
@@ -981,35 +965,6 @@ object Analytics {
       .agg(count(lit(1)).as("n_orders"),
         dsum(col("o_totalprice")).as("sum_price"),
         grouping_id().cast("int").as("gid"))
-
-  /** The REJECTED partial-reuse CUBE spelling — r20 A/B ledger only
-    * (row-identical to [[qCube]]; R20Probe exceptAll = 0).
-    */
-  def qCubePartialReuse(s: SparkSession, dir: String): DataFrame = {
-    val base = t(s, dir, "orders")
-      .groupBy(col("o_orderpriority"), col("o_orderstatus"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("o_totalprice").cast("decimal(18,6)")).as("sp"))
-    def grain(keys: Seq[String], gid: Int) = {
-      val g = if (keys.isEmpty) base.agg(sum(col("n")).as("n_orders"),
-          sum(col("sp")).as("sp2"))
-        else base.groupBy(keys.map(col): _*)
-          .agg(sum(col("n")).as("n_orders"), sum(col("sp")).as("sp2"))
-      g.select(
-        (if (keys.contains("o_orderpriority")) col("o_orderpriority")
-         else lit(null).cast("string").as("o_orderpriority")) ::
-        (if (keys.contains("o_orderstatus")) col("o_orderstatus")
-         else lit(null).cast("string").as("o_orderstatus")) ::
-        col("n_orders") :: col("sp2").cast("double").as("sum_price") ::
-        lit(gid).as("gid") :: Nil: _*)
-    }
-    base.select(col("o_orderpriority"), col("o_orderstatus"),
-        col("n").as("n_orders"), col("sp").cast("double").as("sum_price"),
-        lit(0).as("gid"))
-      .unionByName(grain(Seq("o_orderpriority"), 1))
-      .unionByName(grain(Seq("o_orderstatus"), 2))
-      .unionByName(grain(Nil, 3))
-  }
 
 
   val qCubeSql: String =
@@ -1164,22 +1119,6 @@ object Analytics {
       .select(lit(null).cast("string").as("l_returnflag"), col("l_linestatus"),
         lit(2).as("gid"), col("n_rows"), col("sq2").cast("double").as("sum_qty"))
     both.unionByName(byFlag).unionByName(byStatus)
-  }
-
-  /** The retired Expand spelling, kept for the r20 A/B ledger (Profile
-    * runs it side-by-side with the adopted partial-reuse plan; never part
-    * of the gated surface).
-    */
-  def qGroupingSetsExpand(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "lineitem").createOrReplaceTempView("lineitem_gsets")
-    s.sql(
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(grouping_id(l_returnflag, l_linestatus) AS INT) AS gid,
-        |  COUNT(*) AS n_rows,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS sum_qty
-        |FROM lineitem_gsets
-        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus),
-        |                        (l_returnflag, l_linestatus))""".stripMargin)
   }
 
   val qGroupingSetsSql: String =

@@ -888,7 +888,7 @@ object Curation {
     // parallel) measured a WASH — 0.685 vs 0.658–0.697 s same-window
     // (R20Probe3): the serial explode map is only ~250 ms and the first
     // aggregate's exchange already carries deduped partials. Rejected;
-    // variant kept runnable in the probe.
+    // the variant is in R20Probe3's git history.
     // r21 (guide §2.4 "two operations keyed the same way share one
     // exchange"): the (gkey, doc_id) aggregate's own exchange carried the
     // FULL 21.1 MB gram stream right after the emission stage had already

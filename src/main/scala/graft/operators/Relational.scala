@@ -358,21 +358,6 @@ object Relational {
         sum(col("sm")).cast("double").as("total_monto"))
   }
 
-  /** The retired Expand (mixed-distinct) q08 spelling — r20 A/B ledger
-    * only (R20Probe), never part of the gated surface.
-    */
-  def qTimeSeriesExpand(s: SparkSession, dir: String): DataFrame = {
-    val l = t(s, dir, "lineitem")
-    val o = t(s, dir, "orders")
-    l.join(o, l("l_orderkey") === o("o_orderkey"))
-      .where(col("o_orderdate").isNotNull)
-      .groupBy(year(col("o_orderdate")).as("year"), month(col("o_orderdate")).as("month"))
-      .agg(
-        countDistinct(col("o_orderkey")).as("num_sorteos"),
-        count(col("l_partkey")).as("num_premios"),
-        dsum(col("l_extendedprice")).as("total_monto"))
-  }
-
   val qTimeSeriesSql: String =
     s"""SELECT YEAR(o.o_orderdate) AS year, MONTH(o.o_orderdate) AS month,
        |  COUNT(DISTINCT o.o_orderkey) AS num_sorteos,

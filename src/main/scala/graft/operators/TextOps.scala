@@ -590,9 +590,6 @@ object TextOps {
     sig.select(col("doc_id") +: array((0 until MinhashK).map(i => col(s"m$i")): _*).as("signature") +: bandCols: _*)
   }
 
-  def qMinhash(s: SparkSession, dir: String): DataFrame =
-    minhashSignatures(t(s, dir, "documents"))
-
   /** Portable MinHash for the driver oracle: same banded-LSH shape as
     * [[minhashSignatures]] but each of the 32 hash families is the
     * lexicographic MIN over md5 hex strings (salted with the family index),

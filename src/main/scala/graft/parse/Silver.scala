@@ -26,11 +26,6 @@ object Silver {
       .as[(String, String)]
   }
 
-  /** S3: partition-key extraction from the path
-    * (reference transformer.py:110-115 `sorteo=(\d+)/`).
-    */
-  val SorteoFromPath = ".*sorteo=(\\d+)/.*".r
-
   /** S4: incremental scan — drop raw files whose `sorteo=` path key already
     * exists in silver. Distributed anti-join on the partition value, the
     * Spark shape of the reference's processed-set check
@@ -66,17 +61,13 @@ object Silver {
   }
 
   /** Parse every raw file into typed silver draws. Malformed files THROW
-    * (whole-file atomicity, parser.py contract) unless `lenient`, which
-    * drops them — the reference logs-and-continues only for files missing
-    * the path key; parse errors are hard failures.
+    * (whole-file atomicity, parser.py contract) — the reference
+    * logs-and-continues only for files missing the path key; parse errors
+    * are hard failures.
     */
-  def parseDraws(raw: Dataset[(String, String)], lenient: Boolean = false): Dataset[SilverDraw] = {
+  def parseDraws(raw: Dataset[(String, String)]): Dataset[SilverDraw] = {
     import raw.sparkSession.implicits._
-    if (lenient)
-      raw.flatMap { case (_, content) =>
-        scala.util.Try(Transformer.toSilver(Parser.parseDraw(content))).toOption
-      }
-    else raw.map { case (_, content) => Transformer.toSilver(Parser.parseDraw(content)) }
+    raw.map { case (_, content) => Transformer.toSilver(Parser.parseDraw(content)) }
   }
 
   def sorteos(draws: Dataset[SilverDraw]): Dataset[Sorteo] = {

@@ -141,8 +141,8 @@ object Events {
   final case class TypePercentiles(
       event_type: String, n: Long, p50: Double, p95: Double, p99: Double)
 
-  /** Streaming percentile monitoring: a [[graft.functions.KllSketch]] per
-    * event type carried across micro-batches as flatMapGroupsWithState
+  /** Streaming percentile monitoring: a DataSketches `KllDoublesSketch`
+    * (the sketch behind Spark's `kll_sketch_agg_double`) per event type carried across micro-batches as flatMapGroupsWithState
     * state (serialized to its compact byte form — O(k log n) per key, the
     * only state a percentile needs at any stream volume). Each batch emits
     * the updated p50/p95/p99 over EVERYTHING seen so far — the
@@ -154,18 +154,20 @@ object Events {
       : org.apache.spark.sql.Dataset[TypePercentiles] = {
     import events.sparkSession.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    import graft.functions.KllSketch
+    import org.apache.datasketches.kll.KllDoublesSketch
+    import org.apache.datasketches.memory.Memory
     events.selectExpr("event_type", "value").as[(String, Double)]
       .groupByKey(_._1)
       .flatMapGroupsWithState[Array[Byte], TypePercentiles](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (et: String, rows: Iterator[(String, Double)], state: GroupState[Array[Byte]]) =>
-          val sketch = state.getOption.map(KllSketch.deserialize)
-            .getOrElse(new KllSketch(256))
+          val sketch = state.getOption
+            .map(b => KllDoublesSketch.heapify(Memory.wrap(b)))
+            .getOrElse(KllDoublesSketch.newHeapInstance(256))
           rows.foreach { case (_, v) => sketch.update(v) }
-          state.update(sketch.serialize())
-          val q = sketch.quantiles(Seq(0.5, 0.95, 0.99))
-          Iterator(TypePercentiles(et, sketch.count, q(0), q(1), q(2)))
+          state.update(sketch.toByteArray)
+          val q = sketch.getQuantiles(Array(0.5, 0.95, 0.99))
+          Iterator(TypePercentiles(et, sketch.getN, q(0), q(1), q(2)))
       }
   }
 

@@ -168,7 +168,7 @@ class FrequentItemsSpec extends AnyFunSuite {
     // programmatic GraftFunctions.register one)
     assert(org.apache.spark.sql.GraftExtensionsTestAccess.functionNames(ext) ==
       Set("cosine_similarity", "token_term_counts", "word_shingles",
-        "kll_quantiles", "mg_freq", "mg_freq_text", "array_sum_long",
+        "mg_freq", "mg_freq_text", "array_sum_long",
         "bloom_agg", "bloom_might_contain"))
   }
 

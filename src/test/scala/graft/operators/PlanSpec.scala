@@ -198,7 +198,7 @@ class PlanSpec extends AnyFunSuite {
   test("q81 KLL sketch aggregates partially map-side (ObjectHashAggregate)") {
     val p = executedPlan("q81_kll_quantiles")
     assert(p.contains("ObjectHashAggregate"), p)
-    assert(p.contains("kll_quantiles"), p)
+    assert(p.contains("kll_sketch_agg_double"), p)
     // three shuffles since r21 (two since r14): the sketch merge on the
     // group key, the rank-error certificate's re-rank aggregate
     // (broadcast of the tiny estimate frame back over lineitem — a

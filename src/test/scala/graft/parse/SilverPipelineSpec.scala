@@ -130,11 +130,34 @@ class SilverPipelineSpec extends AnyFunSuite {
     assert(counts.isEmpty)
   }
 
-  test("lenient parse mode drops malformed files instead of failing the batch") {
+  test("malformed files fail the parse instead of being dropped") {
     val raw = Silver.rawDraws(spark, "data/fixtures/bad/missing_*.txt")
     assert(raw.count() == 2)
-    assert(Silver.parseDraws(raw, lenient = true).count() == 0)
     assertThrows[org.apache.spark.SparkException](Silver.parseDraws(raw).count())
+  }
+
+  test("a week with no sold prize builds empty partitioned gold tables, no throw") {
+    val out = freshDir()
+    val raw = freshDir()
+    val dst = java.nio.file.Paths.get(raw, "year=2025", "sorteo=3200", "draw_3200.txt")
+    Files.createDirectories(dst.getParent)
+    Files.write(dst, Seq(
+      "HEADER",
+      "SORTEO ORDINARIO NO. 3200 FECHA DEL SORTEO: 12/01/2025 " +
+        "FECHA DE CADUCIDAD: 12/04/2025 PRIMER PREMIO 11111 ||| " +
+        "SEGUNDO PREMIO 2222 ||| TERCER PREMIO 333 ||| REINTEGROS 1, 2, 3",
+      "BODY",
+      "11111    P    ............    800,000.00",
+      "NO VENDIDO",
+      "2222    PR    ............    120,000.00",
+      "NO VENDIDO").mkString("\n").getBytes)
+    val counts = Pipeline.run(spark, s"$raw/year=*/sorteo=*/*.txt", out)
+    assert(counts.keySet == Gold.builders.keySet)
+    // every prize unsold: the vendor-keyed, year-partitioned tables are
+    // empty on disk (only _SUCCESS), the draw-keyed ones are not
+    assert(counts("gold_geo_winnings") == 0)
+    assert(counts("gold_vendor_leaderboard") == 0)
+    assert(counts("gold_draw_summary") == 1)
   }
 
   test("CSV sink/scan round-trip preserves silver premios values") {
